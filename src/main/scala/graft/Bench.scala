@@ -145,17 +145,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: benign WARNs (function re-registration before
-    // r18, AQE notices) were flooding stderr, which sbt interleaves
+    val spark = GraftSession()
+    // ERROR, not WARN: benign WARNs (AQE notices) were flooding
+    // stderr, which sbt interleaves
     // into the stdout the driver tails — the results line must own
     // that tail. The bench's own messages print via System.err directly
     // and are unaffected by the log4j level.
@@ -169,7 +161,6 @@ object Bench {
 
     // best-of-2: the first pass absorbs JIT/codegen compilation and any
     // transient host contention; the min is the repeatable number
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val leaked = scala.collection.mutable.ListBuffer.empty[String]
     def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         passes: Int): Seq[Double] = {
@@ -193,8 +184,7 @@ object Bench {
       }
       times
     }
-    val firstPass = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val firstPass = SparkEntry.selected
       .map { case (name, fn) => (name, fn, measure(name, fn, 2)) }
     // outlier adjudication: a min >3× its committed floor (and >1.5 s
     // absolute — sub-second noise isn't contamination) is re-measured

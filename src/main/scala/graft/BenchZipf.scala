@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Zipf-skew A/B bench (VERDICT r16 ask #1) — MEASURES, on the
@@ -39,61 +38,18 @@ import org.apache.spark.sql.functions._
   * Usage: SPARK_GRAFT_ZIPF_DIR=<ZipfGen outDir> runMain graft.BenchZipf
   */
 object BenchZipf {
-
-  final class TaskListener extends SparkListener {
-    val bytes = new java.util.concurrent.atomic.LongAdder
-    val records = new java.util.concurrent.atomic.LongAdder
-    val maxTaskMs = new java.util.concurrent.atomic.LongAccumulator(
-      math.max(_, _), 0L)
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        bytes.add(m.shuffleWriteMetrics.bytesWritten)
-        records.add(m.shuffleWriteMetrics.recordsWritten)
-        maxTaskMs.accumulate(m.executorRunTime)
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_ZIPF_DIR", "/tmp/graft-zipf")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-zipf")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // local-mode shape fidelity: the default 64 MB advisory size
-      // coalesces this fixture's few-MB shuffles into 1-2 partitions,
-      // serializing reduce stages that at production scale run
-      // thousands-wide — 1 MB keeps the local plan's parallelism
-      // shape-faithful without touching the hot-key skew (a hot hash
-      // still lands in ONE partition either way)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.ArrayDotProduct.register(spark)
-    val listener = new TaskListener
+    val spark = GraftSession()
+    // local-mode shape fidelity: the default 64 MB advisory size
+    // coalesces this fixture's few-MB shuffles into 1-2 partitions,
+    // serializing reduce stages that at production scale run
+    // thousands-wide — 1 MB keeps the local plan's parallelism
+    // shape-faithful without touching the hot-key skew (a hot hash
+    // still lands in ONE partition either way)
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
+    val listener = new TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
-
-    def settled(): (Long, Long) = {
-      var last = (listener.bytes.sum(), listener.records.sum())
-      var prev = last
-      var same = 0
-      var polls = 0
-      while (same < 2) {
-        polls += 1
-        if (polls > 500)
-          sys.error(s"shuffle listener never settled after $polls polls" +
-            s" — last two readings: $prev then $last (bytes, records)")
-        Thread.sleep(120)
-        val cur = (listener.bytes.sum(), listener.records.sum())
-        if (cur == last) same += 1 else { same = 0; prev = last; last = cur }
-      }
-      last
-    }
 
     case class Reading(ms: Long, bytes: Long, records: Long, maxTaskMs: Long)
     val readings = scala.collection.mutable.LinkedHashMap[String, Reading]()
@@ -103,12 +59,12 @@ object BenchZipf {
     def measure(name: String)(fn: => DataFrame): Reading = {
       spark.catalog.clearCache()
       fn.write.format("noop").mode("overwrite").save()
-      val (b0, r0) = settled()
+      val (b0, r0) = listener.settled()
       listener.maxTaskMs.reset()
       val t0 = System.nanoTime()
       fn.write.format("noop").mode("overwrite").save()
       val ms = (System.nanoTime() - t0) / 1000000L
-      val (b1, r1) = settled()
+      val (b1, r1) = listener.settled()
       val rd = Reading(ms, b1 - b0, r1 - r0, listener.maxTaskMs.get())
       readings(name) = rd
       println(s"[zipf] $name: ${rd.ms} ms, ${rd.records} shuffle records," +

@@ -1,35 +1,26 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: write every registered query's `.explain("formatted")` to
   * `<outDir>/<query><suffix>.txt` — the optimization-round evidence
   * files (plans/rNN/<query>_before.txt / _after.txt). Optional 4th arg
-  * restricts to a comma-separated name list.
+  * restricts to a comma-separated list of name substrings (the
+  * SPARK_GRAFT_ONLY meaning).
   *
-  * Runs with the bench session settings (AQE on, shuffle partitions =
-  * SPARK_GRAFT_CPUS) so the dumped plans are the ones the bench
-  * executes, not a differently-configured twin.
+  * Runs on [[GraftSession]], the session the bench runs on, so the
+  * dumped plans are the ones the bench executes, not a
+  * differently-configured twin.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("plans/r17")
     val suffix = args.lift(2).getOrElse("_before")
-    val only = args.lift(3).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .appName("graft-dump-plans")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .filter { case (n, _) => SparkEntry.selects(args.lift(3))(n) }
       .foreach { case (name, fn) =>
         try {
           val s = fn(spark, sfDir).queryExecution.explainString(

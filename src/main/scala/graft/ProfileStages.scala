@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiler (guide §1/§7): run named queries with a listener that
   * captures per-job and per-stage wall time + task metrics, so the
   * expensive part of a multi-job query (which stage, how much of the
@@ -13,63 +10,11 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.ProfileStages <q1,q2,...> [sfDir]
   */
 object ProfileStages {
-
-  final case class StageRec(id: Int, name: String, submitted: Long,
-    completed: Long, tasks: Int, runTimeMs: Long, cpuTimeMs: Long,
-    shufReadB: Long, shufWriteB: Long, inputB: Long, outputB: Long,
-    gcMs: Long, fetchWaitMs: Long, deserMs: Long)
-
-  final class Rec extends SparkListener {
-    val stages = new java.util.concurrent.ConcurrentHashMap[Int, StageRec]()
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
-    val taskAgg = new java.util.concurrent.ConcurrentHashMap[Int,
-      Array[Long]]() // runTime, cpuTime(ns), srB, swB, inB, outB, gc, n, fetchWait, deser
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        val a = taskAgg.computeIfAbsent(t.stageId, _ => new Array[Long](10))
-        a.synchronized {
-          a(0) += m.executorRunTime
-          a(1) += m.executorCpuTime
-          a(2) += m.shuffleReadMetrics.totalBytesRead
-          a(3) += m.shuffleWriteMetrics.bytesWritten
-          a(4) += m.inputMetrics.bytesRead
-          a(5) += m.outputMetrics.bytesWritten
-          a(6) += m.jvmGCTime
-          a(7) += 1
-          a(8) += m.shuffleReadMetrics.fetchWaitTime
-          a(9) += m.executorDeserializeTime
-        }
-      }
-    }
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-      val si = e.stageInfo
-      val a = taskAgg.getOrDefault(si.stageId, new Array[Long](10))
-      stages.put(si.stageId, StageRec(si.stageId, si.name,
-        si.submissionTime.getOrElse(0L), si.completionTime.getOrElse(0L),
-        si.numTasks, a(0), a(1) / 1000000L, a(2), a(3), a(4), a(5), a(6),
-        a(8), a(9)))
-    }
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      jobs.put(e.jobId, (e.time, 0L))
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-      val prev = jobs.getOrDefault(e.jobId, (0L, 0L))
-      jobs.put(e.jobId, (prev._1, e.time))
-    }
-    def clear(): Unit = { stages.clear(); jobs.clear(); taskAgg.clear() }
-  }
-
   def main(args: Array[String]): Unit = {
     val names = args.headOption.getOrElse("q97_work_author_guard").split(",")
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val rec = new Rec
+    val spark = GraftSession()
+    val rec = new TaskMetricsListener
     spark.sparkContext.addSparkListener(rec)
     names.foreach { n =>
       val q = SparkEntry.queries(n)
@@ -78,12 +23,12 @@ object ProfileStages {
       q(spark, dir).write.format("noop").mode("overwrite").save()
       val warm = (System.nanoTime() - tw0) / 1e9
       spark.catalog.clearCache()
-      Thread.sleep(300)
+      rec.settled()
       rec.clear()
       val t0 = System.nanoTime()
       q(spark, dir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // let listener drain
+      rec.settled()
       import scala.jdk.CollectionConverters._
       val st = rec.stages.values.asScala.toSeq.sortBy(-_.runTimeMs)
       val jobsSorted = rec.jobs.asScala.toSeq.sortBy(_._1)

@@ -24,6 +24,19 @@ object SparkEntry {
       PipelineQueries.queries ++ TopicApiQueries.queries ++
       SnapshotQueries.queries ++ FunderIngestQueries.queries
 
+  /** The dev subset filter (`SPARK_GRAFT_ONLY`): a comma-separated list
+    * of name SUBSTRINGS, so `q97` selects `q97_work_author_guard`;
+    * unset selects every query. */
+  def selects(only: Option[String])(name: String): Boolean =
+    only.forall(_.split(",").exists(name.contains))
+
+  /** The registered queries in name order, narrowed by
+    * SPARK_GRAFT_ONLY. */
+  def selected: Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    queries.toSeq.sortBy(_._1).filter { case (n, _) => selects(only)(n) }
+  }
+
   def oracleSql: Map[String, String] =
     RelationalQueries.oracle ++ DomainQueries.oracle ++
       TextQueries.oracle ++ VectorQueries.oracle ++ WorksQueries.oracle ++

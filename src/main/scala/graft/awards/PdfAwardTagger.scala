@@ -163,9 +163,12 @@ object PdfAwardTagger {
     * recompiles a non-foldable pattern per row pair; the registry
     * sides here carry a few dozen DISTINCT patterns evaluated against
     * every section row). Semantics identical to `functions.rlike`
-    * (PlansSpec parity arm). Sessions register it via core.Tables. */
+    * (PlansSpec parity arm). Built as a Column directly, so it needs
+    * no session registration. */
   implicit private class DynRlike(c: Column) {
     def rlike_dynamic(pattern: Column): Column =
-      call_function("rlike_cached", c, pattern)
+      org.apache.spark.sql.GraftExpr.column(graft.plans.RLikeCached(
+        org.apache.spark.sql.GraftExpr.expression(c),
+        org.apache.spark.sql.GraftExpr.expression(pattern)))
   }
 }

@@ -34,10 +34,6 @@ object Tables {
     StructField("props", StringType)))
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    graft.plans.ArrayDotProduct.register(spark)
-    graft.plans.CharHash.register(spark)
-    graft.plans.SortedIntersectCount.register(spark)
-    graft.plans.RLikeCached.register(spark)
     if (name == "events") readEvents(spark, s"$dir/$name.parquet")
     else spark.read.parquet(s"$dir/$name.parquet")
   }

@@ -23,10 +23,12 @@ object Similarity {
     * codegen'd native expression (graft.plans.ArrayDotProduct — same
     * bit-for-bit semantics as the `aggregate(zip_with(...))` fold, but
     * stays in whole-stage codegen instead of interpreting two lambdas
-    * per element). The session must have it registered — done by
-    * `core.Tables`, `bruteForceTopK` and the test harness. */
+    * per element). Built as a Column directly, so it needs no
+    * session registration and resolves on any session. */
   def dot(a: Column, b: Column): Column =
-    call_function("array_dot", a, b)
+    org.apache.spark.sql.GraftExpr.column(graft.plans.ArrayDotProduct(
+      org.apache.spark.sql.GraftExpr.expression(a),
+      org.apache.spark.sql.GraftExpr.expression(b)))
 
   /** The pure-built-in fold (reference semantics; used to cross-check
     * the native expression). */
@@ -45,7 +47,6 @@ object Similarity {
     * results are bit-identical — only the evaluation count changes). */
   def bruteForceTopK(emb: DataFrame, idCol: String, vecCol: String,
       queryPred: Column, k: Int): DataFrame = {
-    graft.plans.ArrayDotProduct.register(emb.sparkSession)
     val e = emb.select(col(idCol), toDoubleVec(col(vecCol)).as("__v"))
       .withColumn("__norm", norm(col("__v")))
     val q = e.filter(queryPred).select(col(idCol).as("q_id"),

@@ -5,12 +5,12 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Register a temp function only when the session doesn't already have
-  * it. `createOrReplaceTempFunction` on every call is semantically
-  * idempotent but logs a `SimpleFunctionRegistry: ... replaced` WARN
-  * per call — Tables() registers four functions per table load, so a
-  * full bench sweep emitted thousands of WARN lines, which is exactly
-  * the noise that pushed the bench's final results line out of the
-  * driver's ~2 KB stdout tail (PERF parsed: null since r14).
+  * it. Registration is the SQL surface of the native expressions (their
+  * names in SQL text or `call_function`), for callers that want them by
+  * name; the program itself builds them as Columns and registers
+  * nothing. `createOrReplaceTempFunction` on every call is idempotent
+  * but logs a `SimpleFunctionRegistry: ... replaced` WARN per call, so
+  * the check keeps repeated registration silent.
   *
   * A lost check-then-act race between two threads merely degrades to
   * one replace WARN; the registered builder is identical either way.

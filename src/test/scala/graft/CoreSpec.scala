@@ -160,4 +160,16 @@ class CoreSpec extends AnyFunSuite {
       .run().select("v", "x").as[(String, Long)].collect().toSeq
     assert(twoUpdates == Seq(("S", 5L)))
   }
+
+  test("SparkEntry.selects: SPARK_GRAFT_ONLY is comma-separated name substrings") {
+    val names = Seq("q08_window_topk_orders", "q97_work_author_guard",
+      "q145_topk_aggregate")
+    def pick(only: Option[String]) = names.filter(SparkEntry.selects(only))
+    assert(pick(None) == names)
+    assert(pick(Some("q97")) == Seq("q97_work_author_guard"))
+    assert(pick(Some("q97_work_author_guard")) == Seq("q97_work_author_guard"))
+    assert(pick(Some("q08,topk")) ==
+      Seq("q08_window_topk_orders", "q145_topk_aggregate"))
+    assert(pick(Some("q999")).isEmpty)
+  }
 }

@@ -580,5 +580,22 @@ class OperatorsSpec extends AnyFunSuite {
       "SELECT array_dot(array(1.0d, cast(null as double)), array(1.0d, 2.0d)) d")
       .collect()(0)
     assert(withNull.isNullAt(0))
+    // the program's path needs no registration: a fresh session (no
+    // temp functions in its registry) evaluates dot directly and inside
+    // a transform lambda (the ivfCells centroid election)
+    val fresh = spark.newSession()
+    assert(!fresh.catalog.functionExists("array_dot"))
+    val fv = fresh.createDataFrame(vecs.rdd, vecs.schema)
+    assert(fv.select(Similarity.dot(col("a"), col("b"))).collect()
+      .map(_.getDouble(0)).toSeq == both.map(_.getDouble(1)).toSeq)
+    val e = fv.filter(size(col("a")) === 3)
+      .select(lit(7L).as("id"), col("a"))
+      .withColumn("n", Similarity.norm(col("a")))
+    val cent = fresh.createDataFrame(Seq(
+        (0L, Seq(1.0, 0.0, 0.0)), (1L, Seq(0.0, 0.0, 1.0))))
+      .toDF("cent_id", "cv").withColumn("cn", Similarity.norm(col("cv")))
+    // (1.5, -2.25, 3.125) leans to the z axis
+    assert(Similarity.ivfCells(e, "id", "a", "n", cent, 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((7L, 1L)))
   }
 }
