@@ -1,8 +1,10 @@
 package graft
 
-/** Plan auditor: prints formatted physical plans for representative
+import org.apache.spark.sql.SparkSession
+
+/** Plan auditor: checks formatted physical plans for representative
   * queries so pushdown/broadcast/codegen regressions are visible.
-  * Checks (exit 1 on failure):
+  * Checks:
   *  - q02: parquet scan carries PushedFilters + pruned ReadSchema
   *  - q03: nation/region joined via BroadcastHashJoin
   *  - q01: partial (map-side) aggregation before the shuffle
@@ -11,6 +13,10 @@ package graft
   *    through one task). Allowlisted: q26/q51/q52 — IdMinter's global
   *    row_number is bounded by design to the new-entity remainder, never
   *    the corpus (IdMinter.scala:14-18).
+  *
+  * [[checks]] runs them all; `main` prints every plan and verdict and
+  * exits 1 on a failure, and ExplainAuditSpec (`sbt testSlow`) gates
+  * the same list.
   */
 object ExplainAudit {
   /** Exact number of `check(...)` calls a full run performs (named
@@ -20,20 +26,37 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = GraftSession(4)
+    val results = checks(spark, sfDir, println)
+    // Pin the total so doc claims can't drift: adding/removing a check
+    // (or a registered query, via the generic screen) must also bump
+    // this constant — the audit itself fails otherwise.
+    println(s"[audit] TOTAL ${results.size} checks")
+    val countOk = results.size == ExpectedChecks
+    if (!countOk) {
+      println(s"[audit] FAIL expected $ExpectedChecks checks, " +
+        s"ran ${results.size} — update ExplainAudit.ExpectedChecks")
+    }
+    spark.stop()
+    if (!countOk || results.exists(!_._1)) sys.exit(1)
+  }
 
+  /** Every plan check over the registered queries on `sfDir`, in order,
+    * as (passed, description). `show` receives each formatted plan and
+    * each verdict line as it is produced. */
+  def checks(spark: SparkSession, sfDir: String,
+      show: String => Unit = _ => ()): Seq[(Boolean, String)] = {
     def plan(name: String): String = {
       val df = SparkEntry.queries(name)(spark, sfDir)
       val s = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      println(s"===== $name =====\n$s")
+      show(s"===== $name =====\n$s")
       s
     }
 
-    var ok = true
-    var nChecks = 0
+    val results = Seq.newBuilder[(Boolean, String)]
     def check(cond: Boolean, msg: String): Unit = {
-      println(s"[audit] ${if (cond) "OK " else "FAIL"} $msg")
-      ok &= cond; nChecks += 1
+      show(s"[audit] ${if (cond) "OK " else "FAIL"} $msg")
+      results += ((cond, msg))
     }
 
     val p02 = plan("q02_filter_pushdown_projection")
@@ -554,17 +577,6 @@ object ExplainAudit {
       }
     }
 
-    // Pin the total so doc claims can't drift: adding/removing a check
-    // (or a registered query, via the generic screen) must also bump
-    // this constant — the audit itself fails otherwise.
-    println(s"[audit] TOTAL $nChecks checks")
-    if (nChecks != ExpectedChecks) {
-      println(s"[audit] FAIL expected $ExpectedChecks checks, " +
-        s"ran $nChecks — update ExplainAudit.ExpectedChecks")
-      ok = false
-    }
-
-    spark.stop()
-    if (!ok) sys.exit(1)
+    results.result()
   }
 }

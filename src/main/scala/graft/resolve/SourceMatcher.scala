@@ -21,10 +21,16 @@ import org.apache.spark.sql.expressions.Window
   *    eissn > lissn > pissn then id text, joined to the exploded
   *    per-source ISSN index.
   *
-  * Scale posture: every tier is a keyed equijoin; the source-side
-  * indexes (ISSN / endpoint / datacite explodes) are registry-sized
-  * (thousands of rows), so each join broadcasts; the only work-sized
-  * shuffles are the per-native_id row_number dedups, all bounded by the
+  * Scale posture: the tiers are conditional joins on one lineage, so
+  * the location set is read once for the repo/PubMed/ISSN tiers, once
+  * for the narrow (native_id, ids) projection that elects each work's
+  * best ISSN match, and once for datacite, which keeps one row per
+  * native_id; the display-name and post-CTAS fallbacks are broadcast
+  * left joins on the same lineage, never a matched/unmatched split
+  * unioned back. The source-side indexes (ISSN / endpoint / datacite
+  * explodes) are registry-sized (thousands of rows), so each index join
+  * broadcasts; the only work-sized shuffles are the per-native_id ISSN
+  * election and the datacite row_number dedup, both bounded by the
   * handful of ids a single location carries.
   *
   * Determinism deviation (documented): the reference's per-work
@@ -106,49 +112,64 @@ object SourceMatcher {
 
   /** Primary-tier attach: route by provenance, return every location
     * with `source_id` / `is_oa_source` (null when no tier matched).
-    * `locations` must carry provenance, native_id, ids[], endpoint_id. */
+    * `locations` must carry provenance, native_id, ids[], endpoint_id.
+    * Rows with a null provenance route to no tier and are dropped. */
   def attachPrimary(locations: DataFrame, sources: DataFrame,
       endpointToSource: DataFrame,
       excluded: Seq[Long] = defaultExcludedIds): DataFrame = {
     val srcF = filteredSources(sources, excluded)
     val cols = locations.columns.map(col)
+    val prov = col("provenance")
+    val isRepo = prov.isin("repo", "repo_backfill")
+    val isIssn = !prov.isin("repo", "repo_backfill", "datacite", "pubmed")
 
-    // other (crossref/landing_page/…): extract self-ish ISSNs, rank
-    // eissn > lissn > pissn then id text, take the best match per work.
-    val others = locations.filter(
-      !col("provenance").isin("repo", "repo_backfill", "datacite", "pubmed"))
-    val relevant = explode_outer(filter(col("ids"), x =>
+    // ISSN tier (crossref/landing_page/…): the self-ish ISSNs of the
+    // ISSN-routed rows, ranked eissn > lissn > pissn then id text, the
+    // lowest source id on a tie; one best match per native_id, taken
+    // from a narrow (native_id, ids) projection. Index columns are
+    // aliased (__src_id/__src_oa) so a caller-supplied `id` /
+    // `is_oa_source` location column never makes a reference ambiguous.
+    val relevant = explode(filter(col("ids"), x =>
       x.getField("namespace").contains("issn") &&
         (x.getField("relationship").isin(issnRelationships.map(lit): _*) ||
           x.getField("relationship").isNull)))
-    val ranked = others.select(cols :+ relevant.as("__rel"): _*)
-      .withColumn("__nid_rn", row_number().over(Window.partitionBy(col("native_id"))
-        .orderBy(issnNamespaceRank(col("__rel.namespace")).asc_nulls_last,
-          col("__rel.id").asc_nulls_last)))
-    // index columns aliased (__src_id/__src_oa) so a caller-supplied
-    // `id`/`is_oa_source` location column can never make the window /
-    // select references ambiguous (same idiom as the repo tier's __ep).
-    val issnMatches = ranked
+    val issnBest = locations.filter(isIssn)
+      .select(col("native_id").as("__mid"), relevant.as("__rel"))
       .join(broadcast(issnIndex(srcF)
           .select(col("issn"), col("id").as("__src_id"),
             col("is_oa_source").as("__src_oa"))),
-        ranked("__rel.id") === col("issn"))
-      .withColumn("__best", row_number().over(Window.partitionBy(col("native_id"))
-        .orderBy(col("__nid_rn").asc, col("__src_id").asc)))
-      .filter(col("__best") === 1)
-      .select(col("native_id").as("__mid"), col("__src_id").as("source_id"),
-        col("__src_oa").as("is_oa_source"))
-    val othersFinal = others.join(issnMatches,
-      others("native_id") === col("__mid"), "left").drop("__mid")
+        col("__rel.id") === col("issn"))
+      .groupBy(col("__mid"))
+      .agg(min(struct(
+        coalesce(issnNamespaceRank(col("__rel.namespace")), lit(4)).as("r"),
+        col("__rel.id").as("i"), col("__src_id").as("s"),
+        col("__src_oa").as("o"))).as("__issn"))
 
-    // datacite: extract the datacite_client id, join the client index,
-    // keep the lowest-source match per work (unmatched rows stay).
-    val datacite = locations.filter(col("provenance") === "datacite")
+    // repo, PubMed and ISSN tiers on one lineage: each tier is a
+    // conditional left join (or a constant) keyed by provenance.
+    val primary = locations.filter(prov.isNotNull && prov =!= "datacite")
+      .join(broadcast(endpointIndex(endpointToSource, srcF)
+          .select(col("endpoint_id").as("__ep"), col("id").as("__ep_id"),
+            col("is_oa_source").as("__ep_oa"))),
+        isRepo && col("endpoint_id") === col("__ep"), "left")
+      .join(issnBest, isIssn && col("native_id") === col("__mid"), "left")
+      .select(cols ++ Seq(
+        when(isRepo, col("__ep_id"))
+          .when(prov === "pubmed", lit(pubmedSourceId))
+          .otherwise(col("__issn.s")).as("source_id"),
+        when(isRepo, col("__ep_oa"))
+          .when(prov === "pubmed", lit(false))
+          .otherwise(col("__issn.o")).as("is_oa_source")): _*)
+
+    // datacite: its own branch, because it keeps one row per native_id:
+    // extract the datacite_client id, join the client index, keep the
+    // lowest-source match per work (unmatched rows stay).
     val clientId = explode_outer(filter(col("ids"), x =>
       x.getField("namespace") === "datacite_client" &&
         (x.getField("relationship") === "self" ||
           x.getField("relationship").isNull)))
-    val dcFinal = datacite.select(cols :+ clientId.as("__client"): _*)
+    val datacite = locations.filter(prov === "datacite")
+      .select(cols :+ clientId.as("__client"): _*)
       .join(broadcast(dataciteIndex(srcF)
           .select(col("datacite_id"), col("id").as("__src_id"),
             col("is_oa_source").as("__src_oa"))),
@@ -159,29 +180,14 @@ object SourceMatcher {
       .select(cols ++ Seq(col("__src_id").as("source_id"),
         col("__src_oa").as("is_oa_source")): _*)
 
-    // pubmed: constant source.
-    val pmFinal = locations.filter(col("provenance") === "pubmed")
-      .select(cols ++ Seq(lit(pubmedSourceId).as("source_id"),
-        lit(false).as("is_oa_source")): _*)
-
-    // repo: endpoint_id equijoin.
-    val repoFinal = locations
-      .filter(col("provenance").isin("repo", "repo_backfill"))
-      .join(broadcast(endpointIndex(endpointToSource, srcF)
-          .select(col("endpoint_id").as("__ep"), col("id").as("source_id"),
-            col("is_oa_source"))),
-        col("endpoint_id") === col("__ep"), "left")
-      .drop("__ep")
-
-    val out = cols ++ Seq(col("source_id"), col("is_oa_source"))
-    Seq(othersFinal, dcFinal, pmFinal, repoFinal)
-      .map(_.select(out: _*)).reduce(_.unionByName(_))
+    primary.unionByName(datacite)
   }
 
   /** Display-name fallback: sources whose display_name is unique in the
     * registry (merge redirects excluded, exclusion list NOT applied —
     * the reference matches against the raw registry here) match
-    * unmatched locations on source_name. */
+    * unmatched locations on source_name. One broadcast left join,
+    * conditional on the row being unmatched. */
   def displayNameFallback(attached: DataFrame, sources: DataFrame): DataFrame = {
     val uniq = sources.filter(col("merge_into_id").isNull)
       .groupBy(col("display_name"))
@@ -189,14 +195,13 @@ object SourceMatcher {
         count(lit(1)).as("__cnt"))
       .filter(col("__cnt") === 1 && col("display_name").isNotNull)
       .drop("__cnt")
-    val matched = attached.filter(col("source_id").isNotNull)
-    val unmatched = attached.filter(col("source_id").isNull)
-      .drop("source_id", "is_oa_source")
-      .join(broadcast(uniq), col("source_name") === col("display_name"), "left")
-      .withColumn("source_id", col("__sid"))
-      .withColumn("is_oa_source", col("__oa"))
+    val unmatched = col("source_id").isNull
+    attached.join(broadcast(uniq),
+        unmatched && col("source_name") === col("display_name"), "left")
+      .withColumn("is_oa_source",
+        when(unmatched, col("__oa")).otherwise(col("is_oa_source")))
+      .withColumn("source_id", coalesce(col("source_id"), col("__sid")))
       .drop("display_name", "__sid", "__oa")
-    matched.unionByName(unmatched)
   }
 
   /** Manual cascade over still-unmatched rows: landing/pdf base-URL
